@@ -105,11 +105,6 @@ def _passthrough_fields(input_schema, html_col, keep_html):
     ]
 
 
-def _output_schema(input_schema, html_col, keep_html):
-    passthrough = _passthrough_fields(input_schema, html_col, keep_html)
-    return StructType(passthrough + ARTICLE_FIELDS + STATUS_FIELDS)
-
-
 class MetricsAccumulatorParam(AccumulatorParam):
     """Accumulator merging per-logical-partition extraction metrics:
     ``{partition_id: [docs, ok, failed, cpu_ms]}``.  Lets the job collect

@@ -193,25 +193,23 @@ def _robots_pattern_match(pattern: str, path: str):
     precedence (longest match wins), or None when the pattern does not
     match.  An empty pattern matches everything at length 0."""
     anchored = pattern.endswith("$")
-    pat = pattern[:-1] if anchored else pattern
-    parts = pat.split("*")
-    pos = 0
-    for i, part in enumerate(parts):
-        if i == 0:
-            if not path.startswith(part):
-                return None
-            pos = len(part)
-        else:
-            j = path.find(part, pos)
-            if j < 0:
-                return None
-            pos = j + len(part)
-    if anchored and pos != len(path):
-        # trailing '*' before '$' already consumed arbitrary tail above;
-        # otherwise the match must end exactly at the path end
-        if parts[-1] != "" or pos > len(path):
+    parts = (pattern[:-1] if anchored else pattern).split("*")
+    # an anchored pattern's last literal must end the path; every literal
+    # before it matches leftmost, which leaves it the most room
+    tail = parts.pop() if anchored and len(parts) > 1 else None
+    if not path.startswith(parts[0]):
+        return None
+    pos = len(parts[0])
+    for part in parts[1:]:
+        j = path.find(part, pos)
+        if j < 0:
             return None
-        pos = len(path)
+        pos = j + len(part)
+    if tail is not None:
+        if not path.endswith(tail) or len(path) - len(tail) < pos:
+            return None
+    elif anchored and pos != len(path):
+        return None
     return len(pattern)
 
 

@@ -10,6 +10,8 @@ Common-Crawl page sizes while still amortizing the Arrow transfer.
 from __future__ import annotations
 
 import os
+import site
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -23,7 +25,10 @@ ENGINE_CONF = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # keep Python workers alive across tasks: without this every task forks a
     # fresh worker and pays the pandas/pyarrow import (~0.6-2s per task —
-    # measured 25s -> 2.6s for a 64-task mapInPandas stage on local[8])
+    # measured 25s -> 2.6s for a 64-task mapInPandas stage on local[8]).
+    # A reused worker still paid 100-240 ms a task re-reading Spark's
+    # pyspark zip and spark-core jar; local masters also get the worker
+    # daemon that takes those archives off the path (engine_conf below)
     "spark.python.worker.reuse": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
     # fat binary rows: keep scan partitions moderate
@@ -53,15 +58,71 @@ ENGINE_CONF = {
 }
 
 
+# the directory the readability_spark package is imported from
+_PACKAGE_ROOT = Path(__file__).resolve().parents[2]
+
+
+def _importable_at_worker_start():
+    """True when a Python process started here, with this environment,
+    imports readability_spark from a plain directory without any task's
+    ``--py-files``: from the working directory, PYTHONPATH or site-packages.
+    Not when the package itself came from a zip."""
+    if not _PACKAGE_ROOT.is_dir():
+        return False
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep), *site.getsitepackages()]
+    return any(d and Path(d).resolve() == _PACKAGE_ROOT for d in dirs)
+
+
+def engine_conf(master):
+    """ENGINE_CONF plus the settings that hold only for a ``local[...]``
+    master.  There the Python workers run on this host, so they start from
+    ``readability_spark.worker_daemon`` (installed pyspark instead of Spark's
+    archives, pre-imported engine).  A cluster executor may not have the
+    package when its daemon starts (``--py-files`` arrive per task), so any
+    other master gets ENGINE_CONF alone."""
+    conf = dict(ENGINE_CONF)
+    if (master == "local" or master.startswith("local[")) and _importable_at_worker_start():
+        conf["spark.python.daemon.module"] = "readability_spark.worker_daemon"
+    return conf
+
+
 def get_spark(app_name="readability-spark", master=None, conf=None, shuffle_partitions=None):
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    merged = dict(ENGINE_CONF)
+    merged = engine_conf(master)
     if shuffle_partitions is not None:
         merged["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if conf:
         merged.update(conf)
     for key, value in merged.items():
+        builder = builder.config(key, value)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def submitted_defaults(submitted):
+    """The engine settings to apply under spark-submit: ``engine_conf`` for
+    the submitted master, minus every key the submitter set (its ``--conf``
+    and spark-defaults.conf win; ``builder.config`` would override them)."""
+    defaults = engine_conf(submitted.get("spark.master", "local[*]"))
+    return {k: v for k, v in defaults.items() if k not in submitted}
+
+
+def submitted_spark(app_name):
+    """Session for a spark-submit entry point (``scripts/extract_job.py``):
+    the submitted conf plus ``submitted_defaults``.  spark-submit hands its
+    conf to the JVM it started; reading it needs the gateway to that JVM,
+    which pyspark opens lazily.  Outside spark-submit nothing was submitted
+    and no JVM is started early, so the engine's JVM options still apply."""
+    from pyspark import SparkConf, SparkContext
+
+    submitted = {}
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        SparkContext._ensure_initialized()
+        submitted = dict(SparkConf().getAll())
+    builder = SparkSession.builder.appName(app_name)
+    for key, value in submitted_defaults(submitted).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -27,8 +27,6 @@ import json
 import sys
 import time
 
-from pyspark.sql import SparkSession
-
 
 def parse_args(argv):
     p = argparse.ArgumentParser(description="readability_spark extraction job")
@@ -96,22 +94,11 @@ def main(argv=None):
 
     # getOrCreate picks up spark-submit's --master / --conf; only engine
     # defaults that spark-submit did not set are applied here.
-    from readability_spark.spark.session import ENGINE_CONF
     from readability_spark.spark.job import run_job
+    from readability_spark.spark.session import submitted_spark
     from readability_spark.spark.sources import read_ref
 
-    # builder.config would OVERRIDE spark-submit's --conf; read the
-    # submitted conf (spark-submit exports it as JVM system properties)
-    # and apply only the engine defaults the submitter did not set
-    from pyspark import SparkConf
-
-    submitted = {k for k, _ in SparkConf().getAll()}
-    builder = SparkSession.builder.appName(f"readability-extract-{args.run_id}")
-    for key, value in ENGINE_CONF.items():
-        if key not in submitted:
-            builder = builder.config(key, value)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = submitted_spark(f"readability-extract-{args.run_id}")
 
     cores = spark.sparkContext.defaultParallelism
 

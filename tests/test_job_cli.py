@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
 import sys
 from pathlib import Path
 
@@ -11,8 +14,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
 
 from extract_job import parse_args  # noqa: E402
-from readability_spark.spark import sources  # noqa: E402
+from readability_spark.spark import session, sources  # noqa: E402
 from readability_spark.spark.session import get_spark  # noqa: E402
+
+ROOT = Path(__file__).resolve().parents[1]
+DAEMON = "spark.python.daemon.module"
 
 
 class TestCli:
@@ -35,6 +41,75 @@ class TestCli:
         )
         assert (args.num_partitions, args.salt_n, args.commit_groups) == (8, 2, 1)
         assert args.warmup and args.report_json == "/tmp/x.json"
+
+
+class TestEngineConf:
+    """engine_conf: the worker daemon is a local-master setting only, and
+    spark-submit's own conf wins over every engine default."""
+
+    @pytest.mark.parametrize("master", ["local", "local[4]", "local[*]"])
+    def test_local_master_gets_worker_daemon(self, master):
+        assert session.engine_conf(master)[DAEMON] == "readability_spark.worker_daemon"
+
+    @pytest.mark.parametrize(
+        "master", ["spark://host:7077", "yarn", "k8s://https://host:443", "local-cluster[2,1,1024]"]
+    )
+    def test_cluster_master_keeps_spark_daemon(self, master):
+        conf = session.engine_conf(master)
+        assert DAEMON not in conf
+        assert conf == session.ENGINE_CONF
+
+    def test_package_from_zip_keeps_spark_daemon(self, monkeypatch):
+        monkeypatch.setattr(session, "_PACKAGE_ROOT", ROOT / "readability_spark.zip")
+        assert DAEMON not in session.engine_conf("local[4]")
+
+    def test_submitted_conf_wins(self):
+        submitted = {
+            "spark.master": "local[4]",
+            DAEMON: "pyspark.daemon",
+            "spark.sql.shuffle.partitions": "7",
+        }
+        defaults = session.submitted_defaults(submitted)
+        assert not set(defaults) & set(submitted)
+        assert defaults["spark.sql.parquet.columnarReaderBatchSize"] == "512"
+        assert DAEMON in session.submitted_defaults({"spark.master": "local[4]"})
+        assert DAEMON not in session.submitted_defaults({"spark.master": "spark://h:7077"})
+
+    def test_spark_submit_conf_wins_end_to_end(self, tmp_path):
+        """The session scripts/extract_job.py builds, under a real
+        spark-submit: submitted keys keep their values, the rest get the
+        engine's defaults."""
+        from pyspark.find_spark_home import _find_spark_home
+
+        script = tmp_path / "conf_probe.py"
+        script.write_text(
+            "import json\n"
+            "from readability_spark.spark.session import submitted_spark\n"
+            "spark = submitted_spark('conf-probe')\n"
+            "keys = ['spark.sql.shuffle.partitions', 'spark.python.daemon.module',\n"
+            "        'spark.sql.parquet.columnarReaderBatchSize']\n"
+            "print('CONF ' + json.dumps({k: spark.conf.get(k) for k in keys}))\n"
+            "spark.stop()\n"
+        )
+        env = dict(os.environ, PYTHONPATH=os.pathsep.join([str(ROOT), os.environ.get("PYTHONPATH", "")]))
+        out = subprocess.run(
+            [
+                os.path.join(_find_spark_home(), "bin", "spark-submit"),
+                "--master", "local[1]",
+                "--conf", "spark.ui.enabled=false",
+                "--conf", "spark.sql.shuffle.partitions=7",
+                "--conf", f"{DAEMON}=pyspark.daemon",
+                str(script),
+            ],
+            cwd=ROOT, env=env, capture_output=True, text=True, timeout=300,
+        )
+        lines = [ln for ln in out.stdout.splitlines() if ln.startswith("CONF ")]
+        assert lines, out.stderr[-2000:]
+        assert json.loads(lines[0][5:]) == {
+            "spark.sql.shuffle.partitions": "7",
+            DAEMON: "pyspark.daemon",
+            "spark.sql.parquet.columnarReaderBatchSize": "512",
+        }
 
 
 class TestSources:

@@ -1,19 +1,25 @@
 """RFC 9309 robots.txt matcher: direct spec-case unit tests for
 spark/links.py::robots_rules / robots_allowed (group selection,
 longest-match precedence, allow-wins-ties, wildcards, '$' anchors,
-empty/missing rules), plus a closed-form replay of robots_txt_filter."""
+empty/missing rules), a hypothesis property test of the path-pattern
+matcher against a regex translation, plus a closed-form replay of
+robots_txt_filter."""
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry  # noqa: E402
 from readability_spark.spark.links import (  # noqa: E402
+    _robots_pattern_match,
     robots_allowed,
     robots_rules,
 )
@@ -65,6 +71,9 @@ class TestRobotsRules:
         assert _decide(txt, "g", "/a.php") is False
         assert _decide(txt, "g", "/a.php?x=1") is True  # $ anchors the end
         assert _decide(txt, "g", "/a.html") is True
+        # the anchored last literal matches at the end, not at its first hit
+        assert _decide(txt, "g", "/a.php.php") is False
+        assert _decide(txt, "g", "/a.php.ph") is True
 
     def test_mid_wildcard(self):
         txt = "User-agent: *\nDisallow: /a/*/secret\n"
@@ -157,3 +166,30 @@ def test_frontier_plan_composition(spark):
     per_host = Counter(h for h, _p, _s in got.values())
     assert max(per_host.values()) == entry._CFP_HOST_BUDGET
     assert all(n <= entry._CFP_HOST_BUDGET for n in per_host.values())
+
+
+def _pattern_regex(pattern):
+    """RFC 9309 pattern as a regex: '*' is any run of characters, a final
+    '$' anchors the end, and the pattern matches a prefix of the path."""
+    anchored = pattern.endswith("$")
+    body = pattern[:-1] if anchored else pattern
+    return ".*".join(map(re.escape, body.split("*"))) + (r"\Z" if anchored else "")
+
+
+_PATTERN_CHARS = st.sampled_from("/a.h*")
+_PATTERNS = st.builds(
+    lambda chars, anchored: "/" + "".join(chars) + ("$" if anchored else ""),
+    st.lists(_PATTERN_CHARS, max_size=8),
+    st.booleans(),
+)
+_PATHS = st.lists(st.sampled_from("/a.h"), max_size=12).map(lambda c: "/" + "".join(c))
+
+
+@settings(max_examples=2000, deadline=None)
+@given(_PATTERNS, _PATHS)
+def test_pattern_match_agrees_with_regex(pattern, path):
+    got = _robots_pattern_match(pattern, path)
+    if re.match(_pattern_regex(pattern), path, re.DOTALL):
+        assert got == len(pattern)
+    else:
+        assert got is None

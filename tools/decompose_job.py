@@ -24,7 +24,6 @@ import time
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -36,17 +35,9 @@ def main(argv=None):
     p.add_argument("--report-json", required=True)
     args = p.parse_args(argv)
 
-    from pyspark import SparkConf
+    from readability_spark.spark.session import submitted_spark
 
-    from readability_spark.spark.session import ENGINE_CONF
-
-    submitted = {k for k, _ in SparkConf().getAll()}
-    builder = SparkSession.builder.appName(f"decompose-{args.variant}")
-    for key, value in ENGINE_CONF.items():
-        if key not in submitted:
-            builder = builder.config(key, value)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = submitted_spark(f"decompose-{args.variant}")
     cores = spark.sparkContext.defaultParallelism
 
     from readability_spark.spark.job import extract_articles, with_partition_id, with_salt
