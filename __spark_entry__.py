@@ -8644,7 +8644,7 @@ _ROBOTS_T1 = (
 )
 _ROBOTS_T2 = (
     "# no graftbot group - falls back to *\n"
-    "User-agent: *\nDisallow: /articles/doc-000\nAllow: /articles/doc-0000\n"
+    "User-agent: *\nDisallow: /articles/doc-\nAllow: /articles/doc-0000\n"
 )
 
 
@@ -8667,7 +8667,7 @@ def robots_txt_filter(spark, sf_dir):
     """robots.txt crawl-politeness gate (RFC 9309) — the decision a fetch
     frontier applies BEFORE a URL is ever requested, implemented as a
     real spec matcher (spark/links.py::robots_rules / robots_allowed /
-    robots_filter): most-specific user-agent group selection with '*'
+    robots_filter): exact-token user-agent group selection with '*'
     fallback, longest-matching-pattern precedence, Allow winning ties,
     '*' wildcards and '$' end anchors.  The three synthesized per-domain
     robots bodies make every mechanism load-bearing — a site-wide

@@ -7,7 +7,7 @@ task via the serialized closure.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -15,7 +15,6 @@ class Options:
     """Defaults match ReadabilityOptions::default()
     (/root/reference/src/options.rs:36-50)."""
 
-    debug: bool = False
     keep_classes: bool = False
     link_density_bias: float = 0.0
     max_elements: int | None = None

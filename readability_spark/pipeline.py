@@ -5,9 +5,14 @@ single-document ``extract`` entry point (mirrors Readability::parse,
 
 from __future__ import annotations
 
+import gzip
+import zlib
+
 from . import dom, stages
 from .model import Article, Context, ExtractionError
-from .options import DEFAULT_OPTIONS, Options
+from .options import DEFAULT_OPTIONS
+
+GZIP_MAGIC = b"\x1f\x8b"
 
 DEFAULT_STAGES = (
     stages.element_limit,
@@ -29,27 +34,11 @@ DEFAULT_STAGES = (
 )
 
 
-def run_pipeline(document, options=DEFAULT_OPTIONS, metadata=None):
+def run_pipeline(document, options=DEFAULT_OPTIONS):
     """Run the default stage sequence over a parsed document; returns the
     final Context.  Any stage error aborts the document
-    (/root/reference/src/pipeline.rs:20-26).  ``debug`` logs per-stage
-    timings to stderr (mozilla's debug flag analog; never alters output)."""
+    (/root/reference/src/pipeline.rs:20-26)."""
     ctx = Context(document=document, options=options)
-    if metadata is not None:
-        ctx.metadata = metadata
-    if options.debug:
-        import sys
-        import time as _time
-
-        for stage in DEFAULT_STAGES:
-            t0 = _time.perf_counter()
-            stage(ctx)
-            print(
-                f"readability_spark: {stage.__name__} "
-                f"{(_time.perf_counter() - t0) * 1000:.2f} ms",
-                file=sys.stderr,
-            )
-        return ctx
     for stage in DEFAULT_STAGES:
         stage(ctx)
     return ctx
@@ -108,11 +97,20 @@ def extract_row(html, options=None, base_url=None, want_content=True):
     ``(article_or_none, status, error)``.  A failed row must never kill the
     Arrow batch (SURVEY.md section 1.2).  Empty / undecodable input is
     treated as a malformed-document error (FIXTURES.md section 2,
-    ``malformed`` family)."""
+    ``malformed`` family).
+
+    Bytes that start with the gzip magic ``\\x1f\\x8b`` (which no UTF-8
+    text can start with) are a gzip member and are decompressed first; a
+    corrupt member is an error row whose message starts with ``gzip:``."""
     try:
         if html is None:
             return None, "error", "null html"
         if isinstance(html, (bytes, bytearray)):
+            if html[:2] == GZIP_MAGIC:
+                try:
+                    html = gzip.decompress(html)
+                except (OSError, EOFError, zlib.error) as exc:
+                    return None, "error", f"gzip: {exc}"
             html = bytes(html).decode("utf-8")  # may raise UnicodeDecodeError
         if not html.strip():
             return None, "error", "empty document"

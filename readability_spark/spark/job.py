@@ -25,6 +25,7 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass
+from itertools import repeat
 from typing import Iterator
 
 import pandas as pd
@@ -94,17 +95,6 @@ _RESERVED = set(_ARTICLE_COL_NAMES) | {
 }
 
 
-def _passthrough_fields(input_schema, html_col, keep_html):
-    """Input columns carried through unchanged; names colliding with Article
-    output columns (e.g. the crawl's ``lang`` hint vs the extracted lang)
-    are dropped — the extracted value wins."""
-    return [
-        f
-        for f in input_schema.fields
-        if (keep_html or f.name != html_col) and f.name not in _RESERVED
-    ]
-
-
 class MetricsAccumulatorParam(AccumulatorParam):
     """Accumulator merging per-logical-partition extraction metrics:
     ``{partition_id: [docs, ok, failed, cpu_ms]}``.  Lets the job collect
@@ -129,25 +119,23 @@ class MetricsAccumulatorParam(AccumulatorParam):
 
 
 def extract_articles(
-    df: DataFrame,
-    options=None,
-    html_col="html",
-    keep_html=False,
-    base_url_col=None,
-    article_columns=None,
-    metrics_acc=None,
-    partition_col="partition_id",
-    html_codec=None,
+    df: DataFrame, options=None, article_columns=None, metrics_acc=None
 ) -> DataFrame:
     """Add the Article columns to a pages DataFrame.
 
     Library surface mirroring Readability::parse at dataset scale
     (/root/reference/src/readability.rs:38-63): one vectorized
-    ``mapInPandas`` pass; per-row failures become status/error columns,
-    never exceptions (a failed document must not kill the Arrow batch).
+    ``mapInPandas`` pass over the pages contract; per-row failures become
+    status/error columns, never exceptions (a failed document must not kill
+    the Arrow batch).  Every row goes through ``pipeline.extract_row``,
+    which also takes gzip-compressed ``html`` bytes.
 
-    ``base_url_col`` (e.g. ``"url"``) supplies each row's document URI to
-    the opt-in fixRelativeUris pass (Options(fix_relative_uris=True)).
+    The ``html`` column is consumed; every other input column passes
+    through unchanged, except names that collide with the output columns
+    (e.g. the crawl's ``lang`` hint vs the extracted lang), which are
+    dropped — the extracted value wins.  With
+    ``Options(fix_relative_uris=True)`` each row's URIs resolve against its
+    own ``url``.
 
     ``article_columns`` is projection pushdown into the UDF: an iterable of
     Article column names to emit (default: all ten).  Catalyst prunes
@@ -158,18 +146,9 @@ def extract_articles(
     emitted.
 
     ``metrics_acc`` (an accumulator built with ``MetricsAccumulatorParam``)
-    collects per-``partition_col`` [docs, ok, failed, cpu_ms] as the pass
+    collects per-``partition_id`` [docs, ok, failed, cpu_ms] as the pass
     runs, so callers get per-partition throughput without re-scanning the
     output.
-
-    ``html_codec="gzip"`` declares the html column holds gzip-compressed
-    bytes, decompressed (zlib, C-speed) inside the UDF right next to the
-    parser.  This is the exchange-bandwidth lever for fat-row tables: the
-    ~10:1-compressible html then moves through the columnar scan batches,
-    the shuffle, AND the JVM->Python Arrow pipe at its compressed size —
-    the decomposition in BENCH/BASELINE.md shows those byte-moving stages
-    are the extraction job's non-scaling bandwidth floor.  A corrupt
-    member yields a status='error' row, never a dead batch.
     """
     options = options or DEFAULT_OPTIONS
     if article_columns is None:
@@ -181,49 +160,40 @@ def extract_articles(
             raise ValueError(f"unknown article columns: {sorted(unknown)}")
     want_content = "content" in art_cols
     art_fields = [f for f in ARTICLE_FIELDS if f.name in art_cols]
-    passthrough = _passthrough_fields(df.schema, html_col, keep_html)
+    passthrough = [
+        f for f in df.schema.fields if f.name != "html" and f.name not in _RESERVED
+    ]
     out_schema = StructType(passthrough + art_fields + STATUS_FIELDS)
     pass_cols = [f.name for f in passthrough]
     out_cols = [f.name for f in out_schema.fields]
-    if metrics_acc is not None and partition_col not in df.columns:
-        raise ValueError(f"metrics_acc requires a {partition_col!r} column")
-    if html_codec not in (None, "gzip"):
-        raise ValueError(f"unknown html_codec: {html_codec!r}")
+    if metrics_acc is not None and "partition_id" not in df.columns:
+        raise ValueError("metrics_acc requires a 'partition_id' column")
+    if options.fix_relative_uris and "url" not in df.columns:
+        raise ValueError("fix_relative_uris requires a 'url' column")
 
     def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gzip as _gzip
-
         for pdf in batches:
             rows = {name: [] for name in art_cols}
             statuses, errors, timings = [], [], []
-            bases = pdf[base_url_col] if base_url_col is not None else None
-            for idx, raw in enumerate(pdf[html_col]):
+            local: dict = {}
+            bases = pdf["url"] if options.fix_relative_uris else repeat(None)
+            pids = pdf["partition_id"] if metrics_acc is not None else repeat(None)
+            for raw, base_url, pid in zip(pdf["html"], bases, pids):
                 t0 = time.perf_counter()
-                if html_codec == "gzip" and raw is not None:
-                    try:
-                        raw = _gzip.decompress(bytes(raw))
-                    except Exception as exc:
-                        timings.append((time.perf_counter() - t0) * 1000.0)
-                        statuses.append("error")
-                        errors.append(f"gzip: {exc}")
-                        for name in art_cols:
-                            rows[name].append(None)
-                        continue
                 article, status, error = extract_row(
-                    raw,
-                    options=options,
-                    base_url=None if bases is None else bases.iloc[idx],
-                    want_content=want_content,
+                    raw, options=options, base_url=base_url, want_content=want_content
                 )
-                timings.append((time.perf_counter() - t0) * 1000.0)
+                ms = (time.perf_counter() - t0) * 1000.0
+                timings.append(ms)
                 statuses.append(status)
                 errors.append(error)
-                if article is None:
-                    for name in art_cols:
-                        rows[name].append(None)
-                else:
-                    for name in art_cols:
-                        rows[name].append(getattr(article, name))
+                for name in art_cols:
+                    rows[name].append(None if article is None else getattr(article, name))
+                if pid is not None:
+                    m = local.setdefault(pid, [0, 0, 0, 0.0])
+                    m[0] += 1
+                    m[1 if status == "ok" else 2] += 1
+                    m[3] += ms
             out = pdf[pass_cols].copy() if pass_cols else pd.DataFrame(index=pdf.index)
             for name in art_cols:
                 out[name] = rows[name]
@@ -233,19 +203,6 @@ def extract_articles(
             out["error"] = errors
             out["extract_ms"] = timings
             if metrics_acc is not None:
-                local: dict = {}
-                pids = pdf[partition_col]
-                for idx, status in enumerate(statuses):
-                    pid = int(pids.iloc[idx])
-                    m = local.get(pid)
-                    if m is None:
-                        m = local[pid] = [0, 0, 0, 0.0]
-                    m[0] += 1
-                    if status == "ok":
-                        m[1] += 1
-                    else:
-                        m[2] += 1
-                    m[3] += timings[idx]
                 metrics_acc.add(local)
             yield out[out_cols]
 
@@ -462,7 +419,6 @@ def run_job(
     commit_groups: int = 4,
     options=None,
     article_columns=None,
-    html_codec=None,
 ) -> JobReport:
     """Resumable extraction job with per-partition lineage.
 
@@ -483,17 +439,8 @@ def run_job(
     ``("title", "text_content", "length", "lang")``.
     """
     t_start = time.time()
-    trace = os.environ.get("READABILITY_JOB_TRACE") == "1"
-
-    def _t(label, t0):
-        if trace:
-            print(f"JOB_TRACE {label}={time.time() - t0:.1f}s", flush=True)
-
     pages = with_partition_id(pages_df, num_partitions)
-
-    t0 = time.time()
     done = completed_partitions(spark, lineage_path, run_id)
-    _t("lineage_check", t0)
     todo = [p for p in range(num_partitions) if p not in done]
 
     groups = [
@@ -505,7 +452,6 @@ def run_job(
     processed = 0
 
     for group in groups:
-        t0 = time.time()
         started_at = pd.Timestamp.utcnow().tz_localize(None)
         subset = pages.filter(F.col("partition_id").isin(group))
         subset = with_salt(subset, salt_n)
@@ -517,16 +463,11 @@ def run_job(
         extracted = extract_articles(
             subset.drop("salt"),
             options=options,
-            # fixRelativeUris resolves against each row's own url
-            base_url_col="url" if options is not None and options.fix_relative_uris else None,
             article_columns=article_columns,
             metrics_acc=acc,
-            html_codec=html_codec,
         )
         append_ref(extracted, output_path, ("partition_id",))
-        _t("extract_write", t0)
         finished_at = pd.Timestamp.utcnow().tz_localize(None)
-        t0 = time.time()
 
         by_pid = acc.value
         lineage_rows = []
@@ -549,10 +490,7 @@ def run_job(
             total_ok += ok
             total_failed += failed
             processed += 1
-        _t("metrics_acc", t0)
-        t0 = time.time()
         _append_lineage(spark, lineage_rows, lineage_path)
-        _t("lineage_write", t0)
 
     wall = time.time() - t_start
     return JobReport(

@@ -149,10 +149,12 @@ def page_seo_meta(pages, url_col="url", html_col="html"):
 
 def robots_rules(robots_txt: str, agent: str = "*"):
     """Parse a robots.txt body into the (allow, pattern) rule list for
-    ``agent`` per RFC 9309: group selection picks the MOST SPECIFIC
-    matching user-agent line (longest case-insensitive match, falling
-    back to '*'); adjacent user-agent lines share one group; unknown
-    directives are ignored.  Returns a list of (is_allow, pattern)."""
+    ``agent`` per RFC 9309 section 2.2.1: the group whose user-agent token
+    equals ``agent`` (case-insensitively) applies, else the '*' group, else
+    no rules.  A token that is only part of the agent name (``bot`` for
+    ``graftbot``) does not select its group.  Adjacent user-agent lines
+    share one group; unknown directives are ignored.  Returns a list of
+    (is_allow, pattern)."""
     groups: dict = {}
     current: list = []
     last_was_ua = False
@@ -177,14 +179,7 @@ def robots_rules(robots_txt: str, agent: str = "*"):
         else:
             last_was_ua = False
     agent = agent.lower()
-    best = None
-    for ua in groups:
-        if ua != "*" and ua in agent or ua == agent:
-            if best is None or len(ua) > len(best):
-                best = ua
-    if best is None and "*" in groups:
-        best = "*"
-    return list(groups[best]) if best is not None else []
+    return list(groups.get(agent if agent in groups else "*", []))
 
 
 def _robots_pattern_match(pattern: str, path: str):
@@ -239,7 +234,7 @@ def robots_filter(
 ):
     """pages(url, robots_txt, ...) -> (url, crawl_allowed, matched_agent):
     evaluate each page URL against ITS host's robots.txt under RFC 9309
-    (most-specific user-agent group, longest-match precedence, allow
+    (exact user-agent group, longest-match precedence, allow
     wins ties, wildcards + '$' anchors) in one vectorized mapInPandas
     pass — the crawl-politeness gate a fetch frontier applies before a
     URL is ever requested.  In production the per-host robots bodies are

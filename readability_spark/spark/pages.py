@@ -13,13 +13,12 @@ driver's correctness gate.
 from __future__ import annotations
 
 import html as _htmlmod
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql.types import (
     BinaryType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -80,33 +79,40 @@ def synthesize_html(doc_id, text, lang):
     )
 
 
-def _synthesize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        urls = [page_url(i, s) for i, s in zip(pdf["doc_id"], pdf["source"])]
-        htmls = [
-            synthesize_html(i, t, l).encode("utf-8")
-            for i, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
-        ]
-        yield pd.DataFrame(
-            {
-                "url": urls,
-                "warc_ts": pd.to_datetime(pdf["doc_id"] * 37, unit="s", origin="2026-01-01"),
-                "html": htmls,
-                "text": pdf["text"],
-                "lang": pdf["lang"],
-            }
-        )
-
-
-def pages_from_documents(documents_df):
-    """documents(doc_id,text,lang,source,...) -> pages(url,warc_ts,html,text,lang).
+def _pages_from(documents_df, render, url=page_url):
+    """documents(doc_id,text,lang,source,...) -> pages(url,warc_ts,html,text,lang)
+    with ``render(doc_id, text, lang)`` as the page and ``url(doc_id,
+    source)`` as its url.
 
     Vectorized (mapInPandas, Arrow batches) — no per-row Python UDF calls at
     the Spark API level, per the north_rule input_hint.
     """
+
+    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "url": [url(i, s) for i, s in zip(pdf["doc_id"], pdf["source"])],
+                    "warc_ts": pd.to_datetime(
+                        pdf["doc_id"] * 37, unit="s", origin="2026-01-01"
+                    ),
+                    "html": [
+                        render(i, t, l).encode("utf-8")
+                        for i, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
+                    ],
+                    "text": pdf["text"],
+                    "lang": pdf["lang"],
+                }
+            )
+
     return documents_df.select("doc_id", "text", "lang", "source").mapInPandas(
-        _synthesize_batches, schema=PAGES_SCHEMA
+        synth, schema=PAGES_SCHEMA
     )
+
+
+def pages_from_documents(documents_df):
+    """documents -> contract pages (synthesize_html)."""
+    return _pages_from(documents_df, synthesize_html)
 
 
 def synthesize_junk_html(doc_id, text, lang):
@@ -153,29 +159,7 @@ def synthesize_junk_html(doc_id, text, lang):
 def junk_pages_from_documents(documents_df):
     """documents -> junk-laden pages (same schema as pages_from_documents);
     input for the extract_prepped_text driver query."""
-
-    def synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [
-                        page_url(i, s) for i, s in zip(pdf["doc_id"], pdf["source"])
-                    ],
-                    "warc_ts": pd.to_datetime(
-                        pdf["doc_id"] * 37, unit="s", origin="2026-01-01"
-                    ),
-                    "html": [
-                        synthesize_junk_html(i, t, l).encode("utf-8")
-                        for i, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
-                    ],
-                    "text": pdf["text"],
-                    "lang": pdf["lang"],
-                }
-            )
-
-    return documents_df.select("doc_id", "text", "lang", "source").mapInPandas(
-        synth, schema=PAGES_SCHEMA
-    )
+    return _pages_from(documents_df, synthesize_junk_html)
 
 
 def synthesize_media_html(doc_id, text, lang):
@@ -221,29 +205,7 @@ def synthesize_media_html(doc_id, text, lang):
 def media_pages_from_documents(documents_df):
     """documents -> media-heavy pages (same schema as pages_from_documents);
     input for the extract_media_text driver query."""
-
-    def synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [
-                        page_url(i, s) for i, s in zip(pdf["doc_id"], pdf["source"])
-                    ],
-                    "warc_ts": pd.to_datetime(
-                        pdf["doc_id"] * 37, unit="s", origin="2026-01-01"
-                    ),
-                    "html": [
-                        synthesize_media_html(i, t, l).encode("utf-8")
-                        for i, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
-                    ],
-                    "text": pdf["text"],
-                    "lang": pdf["lang"],
-                }
-            )
-
-    return documents_df.select("doc_id", "text", "lang", "source").mapInPandas(
-        synth, schema=PAGES_SCHEMA
-    )
+    return _pages_from(documents_df, synthesize_media_html)
 
 
 def synthesize_bench_html(doc_id, text, lang, n_paragraphs=80, n_nav_links=20):
@@ -274,26 +236,9 @@ def synthesize_bench_html(doc_id, text, lang, n_paragraphs=80, n_nav_links=20):
 
 def bench_pages_from_documents(documents_df, n_paragraphs=80, n_nav_links=20):
     """documents -> heavy bench pages (same schema as pages_from_documents)."""
-
-    def synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [page_url(i, s) for i, s in zip(pdf["doc_id"], pdf["source"])],
-                    "warc_ts": pd.to_datetime(
-                        pdf["doc_id"] * 37, unit="s", origin="2026-01-01"
-                    ),
-                    "html": [
-                        synthesize_bench_html(i, t, l, n_paragraphs, n_nav_links).encode("utf-8")
-                        for i, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
-                    ],
-                    "text": pdf["text"],
-                    "lang": pdf["lang"],
-                }
-            )
-
-    return documents_df.select("doc_id", "text", "lang", "source").mapInPandas(
-        synth, schema=PAGES_SCHEMA
+    return _pages_from(
+        documents_df,
+        partial(synthesize_bench_html, n_paragraphs=n_paragraphs, n_nav_links=n_nav_links),
     )
 
 
@@ -306,10 +251,12 @@ def read_pages(spark, sf_dir):
 
 def gzip_html(pages_df):
     """pages -> same schema with the html column gzip-compressed
-    (deterministic: mtime=0).  Production tables at 100 TB store html this
-    way so the compressible bytes ride the scan/shuffle/Arrow exchange at
-    ~1/10 size; extract_articles(html_codec='gzip') decompresses next to
-    the parser."""
+    (deterministic: mtime=0), so the compressible bytes ride the
+    scan/shuffle/Arrow exchange at ~1/10 size.  extract_articles needs no
+    setting for such a table: pipeline.extract_row recognizes each gzip
+    member by its magic bytes and decompresses it next to the parser.  (At
+    sf-scale on one host this measured no faster than plain html;
+    BENCH/scaling_gzip.json.)"""
     import gzip as _gzip
 
     def compress(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -374,34 +321,14 @@ def synthesize_seo_html(doc_id, text, lang):
     )
 
 
+def _seo_page_url(doc_id, source):
+    """page_url plus a ?utm_source=feed tracking suffix for doc_id % 5 in
+    1..3 (the pages that declare a canonical link)."""
+    return page_url(doc_id, source) + ("?utm_source=feed" if doc_id % 5 in (1, 2, 3) else "")
+
+
 def seo_pages_from_documents(documents_df):
     """documents -> SEO-variant pages: tracked-URL duplicates declaring
-    canonical links (doc_id % 5 in 1..3 get a ?utm_source=feed query
-    suffix on their url), robots directives per synthesize_seo_html."""
-
-    def synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [
-                        page_url(i, s)
-                        + ("?utm_source=feed" if i % 5 in (1, 2, 3) else "")
-                        for i, s in zip(pdf["doc_id"], pdf["source"])
-                    ],
-                    "warc_ts": pd.to_datetime(
-                        pdf["doc_id"] * 37, unit="s", origin="2026-01-01"
-                    ),
-                    "html": [
-                        synthesize_seo_html(i, t, l).encode("utf-8")
-                        for i, t, l in zip(
-                            pdf["doc_id"], pdf["text"], pdf["lang"]
-                        )
-                    ],
-                    "text": pdf["text"],
-                    "lang": pdf["lang"],
-                }
-            )
-
-    return documents_df.select("doc_id", "text", "lang", "source").mapInPandas(
-        synth, schema=PAGES_SCHEMA
-    )
+    canonical links (_seo_page_url), robots directives per
+    synthesize_seo_html."""
+    return _pages_from(documents_df, synthesize_seo_html, url=_seo_page_url)

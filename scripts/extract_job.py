@@ -70,15 +70,6 @@ def parse_args(argv):
         "serializing/shipping/writing ~25 KB of HTML per row)",
     )
     p.add_argument(
-        "--html-codec",
-        default=None,
-        choices=["gzip"],
-        help="declare the html column gzip-compressed; decompressed inside "
-        "the UDF next to the parser, so the compressible bytes ride the "
-        "scan batches / shuffle / Arrow pipe at ~1/10 size (the job's "
-        "bandwidth floor — see BENCH/BASELINE.md decomposition)",
-    )
-    p.add_argument(
         "--warmup",
         action="store_true",
         help="run a small untimed extraction first so every Python worker has "
@@ -107,9 +98,7 @@ def main(argv=None):
         from readability_spark.spark.job import extract_articles
 
         warm = read_ref(spark, args.input).limit(cores * 64).repartition(cores * 2)
-        extract_articles(warm, html_codec=args.html_codec).agg(
-            F.count(F.lit(1))
-        ).collect()
+        extract_articles(warm).agg(F.count(F.lit(1))).collect()
 
     options = None
     if args.content_extraction or args.fix_relative_uris or args.min_text_length is not None:
@@ -144,7 +133,6 @@ def main(argv=None):
             if args.article_columns
             else None
         ),
-        html_codec=args.html_codec,
     )
     wall = time.time() - t0
 

@@ -226,17 +226,14 @@ def test_scored_extraction_matches_local_golden(spark, pages_df, fixture_rows):
 
 
 def test_fix_relative_uris_spark_plumbing(spark, pages_df, fixture_rows):
-    """extract_articles(base_url_col='url', fix_relative_uris=True) resolves
-    each row's URIs against that row's own url, byte-identical to the local
+    """extract_articles under Options(fix_relative_uris=True) resolves each
+    row's URIs against that row's own url, byte-identical to the local
     extractor given the same base."""
     from readability_spark.options import Options
     from readability_spark.pipeline import extract_row
 
     opts = Options(fix_relative_uris=True)
-    got = {
-        r.url: r
-        for r in extract_articles(pages_df, options=opts, base_url_col="url").collect()
-    }
+    got = {r.url: r for r in extract_articles(pages_df, options=opts).collect()}
     checked = 0
     for r in fixture_rows[:50]:
         want_article, want_status, _ = extract_row(r.html, options=opts, base_url=r.url)
@@ -315,6 +312,13 @@ def test_article_columns_unknown_rejected(spark, pages_df):
         extract_articles(pages_df, article_columns=("text_content", "nope"))
 
 
+def test_fix_relative_uris_requires_url_column(spark, pages_df):
+    from readability_spark.options import Options
+
+    with pytest.raises(ValueError, match="'url' column"):
+        extract_articles(pages_df.drop("url"), options=Options(fix_relative_uris=True))
+
+
 def test_want_content_skips_serialization():
     """Local-tier check: want_content=False leaves content None and every
     other Article field identical."""
@@ -348,13 +352,13 @@ def test_lineage_scheme_paths_not_treated_as_local(spark, tmp_path):
 
 
 def test_html_codec_gzip_roundtrip(spark, pages_df, extracted):
-    """extract_articles(html_codec='gzip') over gzip-compressed html equals
-    the plain run row for row; a corrupt gzip member isolates as an error
-    row instead of killing the Arrow batch."""
+    """extract_articles over gzip-compressed html equals the plain run row
+    for row (extract_row recognizes each gzip member); a corrupt gzip
+    member isolates as an error row instead of killing the Arrow batch."""
     from readability_spark.spark.pages import gzip_html
 
     gz = gzip_html(pages_df)
-    got = {r.url: r for r in extract_articles(gz, html_codec="gzip").collect()}
+    got = {r.url: r for r in extract_articles(gz).collect()}
     assert set(got) == set(extracted)
     for url, row in extracted.items():
         a = {k: v for k, v in row.asDict().items() if k != "extract_ms"}
@@ -365,10 +369,6 @@ def test_html_codec_gzip_roundtrip(spark, pages_df, extracted):
     bad = spark.createDataFrame(
         [("u1", b"\x1f\x8b\x08\x00garbage"), ("u2", None)], "url string, html binary"
     )
-    rows = {r.url: r for r in extract_articles(bad, html_codec="gzip").collect()}
+    rows = {r.url: r for r in extract_articles(bad).collect()}
     assert rows["u1"].status == "error" and rows["u1"].error.startswith("gzip:")
     assert rows["u2"].status == "error"
-
-    # unknown codec rejected loudly
-    with pytest.raises(ValueError):
-        extract_articles(pages_df, html_codec="zstd")

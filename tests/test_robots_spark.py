@@ -107,9 +107,38 @@ class TestRobotsRules:
             "User-agent: graft\nDisallow: /a/\n"
             "User-agent: graftbot\nDisallow: /b/\n"
         )
-        # both tokens match 'graftbot'; the longer one is selected
+        # only the token equal to the agent selects a group; 'graft' is
+        # another product token even though 'graftbot' contains it
         assert _decide(txt, "graftbot", "/a/x") is True
         assert _decide(txt, "graftbot", "/b/x") is False
+
+    def test_group_selection_is_exact_token(self):
+        txt = (
+            "User-agent: *\nDisallow: /star/\n"
+            "User-agent: bot\nDisallow: /\n"
+            "User-agent: graftbot-images\nDisallow: /\n"
+        )
+        # neither 'bot' (a substring) nor 'graftbot-images' (a superstring)
+        # is graftbot's group: it falls back to '*'
+        assert _decide(txt, "graftbot", "/a") is True
+        assert _decide(txt, "graftbot", "/star/a") is False
+        assert _decide(txt, "bot", "/a") is False
+        assert _decide(txt, "GraftBot-Images", "/a") is False
+
+
+@pytest.mark.parametrize("template", ["_ROBOTS_T0", "_ROBOTS_T1", "_ROBOTS_T2"])
+def test_template_matches_closed_form_past_sf001(template):
+    """The oracle's closed form (template 0 allows all, 1 and 2 allow
+    doc_id < 100) must hold for every 6-digit doc_id, not only the ids
+    below 1000 that the sf0.01 gate generates."""
+    rules = robots_rules(getattr(entry, template), "graftbot")
+    wrong = [
+        doc_id
+        for doc_id in range(5000)
+        if robots_allowed(rules, f"/articles/doc-{doc_id:06d}.html")
+        != (template == "_ROBOTS_T0" or doc_id < 100)
+    ]
+    assert wrong == []
 
 
 def test_robots_filter_replay(spark):

@@ -148,6 +148,32 @@ def test_extract_row_malformed_inputs():
     assert status == "ok" and err is None and art.text_content == "ok"
 
 
+def test_extract_row_decompresses_gzip_members():
+    """A gzip member (magic bytes 1f 8b) extracts exactly like its plain
+    bytes; a corrupt member is a row error prefixed 'gzip:'; plain HTML,
+    bytes or str, is untouched by the check."""
+    import gzip
+
+    html = (
+        '<html lang="en"><head><title>T</title></head><body>'
+        '<p>Some <a href="/x">text</a> here.</p></body></html>'
+    )
+    opts = Options(fix_relative_uris=True)
+    base = "https://example.com/a/b.html"
+    plain = extract_row(html.encode(), options=opts, base_url=base)
+    assert plain[1] == "ok"
+    assert plain == extract_row(html, options=opts, base_url=base)
+    for level in (1, 9):
+        member = gzip.compress(html.encode(), level, mtime=0)
+        assert extract_row(member, options=opts, base_url=base) == plain
+        assert extract_row(bytearray(member), options=opts, base_url=base) == plain
+    assert extract_row(gzip.compress(b"", mtime=0)) == (None, "error", "empty document")
+
+    for corrupt in (b"\x1f\x8b\x08\x00garbage", gzip.compress(html.encode())[:-9]):
+        art, status, err = extract_row(corrupt)
+        assert art is None and status == "error" and err.startswith("gzip: ")
+
+
 def test_extract_row_element_limit_is_row_error():
     art, status, err = extract_row(
         "<html><body><p>a</p><p>b</p></body></html>", options=Options(max_elements=2)

@@ -266,6 +266,36 @@ class TestStreaming:
         b = sorted(map(tuple, batch.select(cols).collect()))
         assert s == b and len(s) == 5
 
+    def test_stream_fix_relative_uris_uses_each_row_url(self, spark, tmp_path_factory):
+        """The streaming job resolves relative URIs against each row's own
+        url, exactly as the local extractor does given that base."""
+        from readability_spark.options import Options
+        from readability_spark.pipeline import extract_row
+        from readability_spark.spark.pages import PAGES_SCHEMA
+
+        base = tmp_path_factory.mktemp("stream_urifix")
+        page = (
+            '<html><body><article><p>Read <a href="more/{i}.html">more</a> '
+            'and see <img src="/img/{i}.png"> here.</p></article></body></html>'
+        )
+        rows = [
+            (f"https://h{i}.example.com/dir/page.html", None,
+             page.format(i=i).encode(), "", "en")
+            for i in range(3)
+        ]
+        spark.createDataFrame(rows, PAGES_SCHEMA).write.parquet(str(base / "input"))
+        opts = Options(fix_relative_uris=True)
+        streamed = stream_extract_to_parquet(
+            spark, str(base / "input"), str(base / "out"), str(base / "ckpt"),
+            options=opts,
+        )
+        got = {r.url: r.content for r in streamed.select("url", "content").collect()}
+        assert len(got) == 3
+        for i, (url, _ts, html, _text, _lang) in enumerate(rows):
+            assert f'href="https://h{i}.example.com/dir/more/{i}.html"' in got[url]
+            assert f'src="https://h{i}.example.com/img/{i}.png"' in got[url]
+            assert got[url] == extract_row(html, options=opts, base_url=url)[0].content
+
     def test_stream_resume_processes_only_new_files(self, spark, docs, tmp_path_factory):
         base = tmp_path_factory.mktemp("stream_resume")
         pages = pages_from_documents(docs)

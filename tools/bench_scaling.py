@@ -118,6 +118,8 @@ def materialize_input(sf_dir, factor, n_paragraphs):
     sf = sf_dir.rstrip("/").split("sf")[-1]
     # synth-source tag: template edits invalidate the cache (see bench.py)
     tag = bench._synth_tag(bench_pages_from_documents)
+    # INPUT_CODEC=gzip stores the html gzip-compressed; the job needs no
+    # flag for it (extract_row recognizes gzip members by their magic bytes)
     codec = os.environ.get("INPUT_CODEC", "")
     suffix = f"_{codec}" if codec else ""
     path = WORK / "input" / f"pages_sf{sf}_r{factor}_p{n_paragraphs}_{tag}{suffix}"
@@ -196,10 +198,6 @@ def run_level(cores, pages_path, tag):
     for kv in filter(None, os.environ.get("EXTRA_SPARK_CONF", "").split(",")):
         i = cmd.index("--py-files")
         cmd[i:i] = ["--conf", kv]
-    # INPUT_CODEC=gzip: the materialized input stores gzip-compressed html
-    # (see materialize_input) and the job decompresses in-UDF
-    if os.environ.get("INPUT_CODEC") == "gzip":
-        cmd += ["--html-codec", "gzip"]
     # EXTRA_JOB_ARGS: extra extract_job.py flags for supplementary runs
     # (e.g. "--content-extraction --min-text-length 0" to measure the
     # Arc90-scored pipeline); identical at both levels of a pair
@@ -446,7 +444,7 @@ def write_baseline_md(path, results, sf_dir, n_paragraphs):
             "then measured and came back NEGATIVE, which sharpens the",
             "conclusion: an arrow.maxRecordsPerBatch sweep (256/512/1024/2048,",
             "2 reps each) moved nothing outside noise, and a full REPEATS=3",
-            "8->32 run over gzip-compressed html input (html_codec='gzip' —",
+            "8->32 run over gzip-compressed html input (decompressed in the UDF —",
             "~10x fewer bytes through scan batches, shuffle, and the Arrow",
             "pipe; BENCH/scaling_gzip.json) measured 0.596/0.728, statistically",
             "identical to the plain 0.618/0.731.  The non-scaling floor is",

@@ -13,7 +13,10 @@ Checks (SURVEY.md section 4.2 / task brief):
   their docstrings are held to it by exchange counts on the plan.
 
 Writes the formatted plans to BENCH/PLANS.md for the record and exits
-non-zero on any failed assertion.
+non-zero on any failed assertion.  The record is reproducible: ids that
+change from run to run are renumbered (``stable_plan``), and a plan whose
+shape itself varies between identical runs is recorded as its gate
+verdict.  The assertions always judge the raw plans.
 """
 
 from __future__ import annotations
@@ -36,6 +39,29 @@ def plan_of(df):
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
+#: run-to-run tokens of a formatted plan: expression ids (``doc_id#123L``),
+#: exchange plan ids, whole-stage-codegen ids, AQE query-stage ids, RDD ids
+_RUN_IDS = (
+    re.compile(r"(#)(\d+)"),
+    re.compile(r"(plan_id=)(\d+)"),
+    re.compile(r"(codegen id : )(\d+)"),
+    re.compile(r"(QueryStage\b.*\n(?:Output \[\d+\]: .*\n)?Arguments: )(\d+)"),
+    re.compile(r"(RDD\[)(\d+)"),
+)
+
+
+def stable_plan(plan):
+    """``plan`` with each kind of run-to-run id renumbered 1, 2, ... in
+    order of first appearance, so two runs of an unchanged plan print the
+    same text."""
+    for pattern in _RUN_IDS:
+        ids = {}
+        plan = pattern.sub(
+            lambda m: m.group(1) + str(ids.setdefault(m.group(2), len(ids) + 1)), plan
+        )
+    return plan
+
+
 def main():
     spark = get_spark(app_name="plan-check", master="local[8]", shuffle_partitions=8)
     sections = []
@@ -49,8 +75,12 @@ def main():
         materialize=False,
         exact_exchanges=None,
         max_exchanges=None,
+        varies=None,
     ):
         """Record the (formatted) plan and assert regex/shuffle properties.
+
+        ``varies`` says why this plan's shape differs between identical
+        runs; the record then holds the gate's patterns instead of the plan.
 
         ``materialize`` runs the query first so AQE finalizes the adaptive
         plan — required before asserting runtime decisions (broadcast
@@ -66,7 +96,17 @@ def main():
         if materialize:
             df.collect()
         plan = plan_of(df)
-        sections.append((name, plan))
+        if varies is None:
+            sections.append((name, stable_plan(plan)))
+        else:
+            sections.append(
+                (
+                    name,
+                    f"plan not recorded: its shape varies between runs ({varies})\n"
+                    f"gate: must {list(must)}, must_not {list(must_not)}, "
+                    f"exact_exchanges={exact_exchanges}, max_exchanges={max_exchanges}",
+                )
+            )
         for pat in must:
             if not re.search(pat, plan):
                 failures.append(f"{name}: expected /{pat}/ in plan")
@@ -910,6 +950,8 @@ def main():
         must=[r"TakeOrderedAndProject[\s\S]*TakeOrderedAndProject"],
         must_not=[r"CartesianProduct"],
         materialize=True,
+        varies="AQE re-plans a branch, so its initial plan may or may not "
+        "share the final plan's operators",
     )
 
     # 34d. BM25: global top-k must be TakeOrderedAndProject (per-
@@ -957,6 +999,8 @@ def main():
         must=[r"HashAggregate", r"Scan parquet"],
         must_not=[r"CartesianProduct"],
         materialize=True,
+        varies="AQE picks the broadcast build side by which query stage "
+        "finishes first",
     )
 
     # 34. HyperLogLog sketch: ONE corpus-sized aggregate (partial+final
@@ -1006,6 +1050,8 @@ def main():
         ],
         max_exchanges=3,
         materialize=True,
+        varies="the distinct-aggregate rewrite orders its groups by "
+        "expression-id hash",
     )
 
     # mixture_plan_report: the corpus reaches exactly ONE bounded
