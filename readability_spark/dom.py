@@ -24,7 +24,6 @@ this subset (FIXTURES.md section 2).
 
 from __future__ import annotations
 
-import os
 import re as _re
 from html import unescape as _unescape
 from html.parser import HTMLParser
@@ -150,16 +149,6 @@ class Node:
         other.parent = parent
         self.parent = None
 
-    def insert_before(self, other, reference):
-        """Insert ``other`` immediately before child ``reference``."""
-        global _REV
-        _REV += 1
-        if other.parent is not None:
-            other.parent.children.remove(other)
-        idx = self.children.index(reference)
-        self.children.insert(idx, other)
-        other.parent = self
-
     # ------------------------------------------------------------- structure
 
     def next_sibling(self):
@@ -179,9 +168,6 @@ class Node:
                 return p.children[j]
         return None
 
-    def last_child(self):
-        return self.children[-1] if self.children else None
-
     def ancestors(self):
         """All ancestors from parent upward (excluding self)."""
         out = []
@@ -194,44 +180,37 @@ class Node:
     def descendants(self):
         """All descendants in document order (excluding self)."""
         out = []
-        stack = list(reversed(self.children))
+        append = out.append
+        stack = [iter(self.children)]
         while stack:
-            n = stack.pop()
-            out.append(n)
-            if n.children:
-                stack.extend(reversed(n.children))
+            for n in stack[-1]:
+                append(n)
+                if n.children:
+                    stack.append(iter(n.children))
+                    break
+            else:
+                stack.pop()
         return out
 
     # --------------------------------------------------------------- content
 
     def text(self):
         """Concatenated text of all descendant (or self) text nodes, document
-        order, no normalization (dom_query Node::text semantics).  Recursive
-        walk (2x the iterative stack's speed — no reversed-copy churn) with
-        an iterative fallback for DOMs deeper than the recursion limit."""
+        order, no normalization (dom_query Node::text semantics)."""
         if self.kind == TEXT:
             return self.data
         parts = []
         append = parts.append
-
-        def rec(children):
-            for n in children:
+        stack = [iter(self.children)]
+        while stack:
+            for n in stack[-1]:
                 if n.kind == TEXT:
                     append(n.data)
                 elif n.children:
-                    rec(n.children)
-
-        try:
-            rec(self.children)
-        except RecursionError:
-            parts.clear()
-            stack = list(reversed(self.children))
-            while stack:
-                n = stack.pop()
-                if n.kind == TEXT:
-                    parts.append(n.data)
-                elif n.children:
-                    stack.extend(reversed(n.children))
+                    stack.append(iter(n.children))
+                    break
+            else:
+                stack.pop()
         return "".join(parts)
 
     # ----------------------------------------------------------------- attrs
@@ -256,16 +235,6 @@ class Node:
         global _REV
         _REV += 1
         self.name = name
-
-    # ----------------------------------------------------------------- preds
-
-    @property
-    def is_element(self):
-        return self.kind == ELEMENT
-
-    @property
-    def is_text(self):
-        return self.kind == TEXT
 
 
 def new_element(name, attrs=None):
@@ -313,8 +282,9 @@ _CDATA_CLOSE = {
     "style": _re.compile(r"</\s*style\s*>", _re.I),
 }
 
-# escape hatch for differential testing (tests/test_dom_tokenizer_diff.py)
-_USE_STDLIB_TOKENIZER = os.environ.get("READABILITY_STDLIB_TOKENIZER") == "1"
+# tests/test_dom_tokenizer_diff.py sets this to parse with the stdlib
+# tokenizer, the reference fast_feed is compared against
+_USE_STDLIB_TOKENIZER = False
 
 # Tag-name intern cache: one lowercase string object per distinct tag name,
 # so repeated tags skip the per-occurrence str.lower() allocation and later
@@ -563,15 +533,6 @@ class _TreeBuilder(HTMLParser):
         else:
             self._insert(new_text(data))
 
-    def _close_p_in_button_scope(self):
-        for i in range(len(self.stack) - 1, -1, -1):
-            name = self.stack[i].name
-            if name == "p":
-                del self.stack[i:]
-                return
-            if name in _BUTTON_SCOPE_STOP:
-                return
-
     def _close_in_scope(self, tags, stop):
         for i in range(len(self.stack) - 1, -1, -1):
             name = self.stack[i].name
@@ -648,7 +609,7 @@ class _TreeBuilder(HTMLParser):
 
         # implicit closes
         if tag in P_CLOSERS:
-            self._close_p_in_button_scope()
+            self._close_in_scope(("p",), _BUTTON_SCOPE_STOP)
         if tag == "li":
             self._close_in_scope(("li",), _LIST_ITEM_SCOPE_STOP)
         if tag in ("dd", "dt"):
@@ -925,91 +886,45 @@ def matches(node, selector):
 _doc_cache = (None, -1, None)
 
 
+def _elements(root):
+    """Element descendants of ``root`` in document order.  Like text() and
+    descendants(), it walks a stack of child iterators: no recursion, so
+    no depth limit."""
+    out = []
+    append = out.append
+    stack = [iter(root.children)]
+    while stack:
+        for n in stack[-1]:
+            if n.kind == ELEMENT:
+                append(n)
+                if n.children:
+                    stack.append(iter(n.children))
+                    break
+        else:
+            stack.pop()
+    return out
+
+
 def _document_elements(root):
     global _doc_cache
     croot, crev, celems = _doc_cache
     if croot is root and crev == _REV:
         return celems
-    elems = []
-    append = elems.append
-
-    def rec(children):
-        # recursive preorder: no reversed-copy churn, ~2x the stack walk
-        for n in children:
-            if n.kind == ELEMENT:
-                append(n)
-                if n.children:
-                    rec(n.children)
-
-    try:
-        rec(root.children)
-    except RecursionError:  # pathologically deep DOM: iterative fallback
-        elems.clear()
-        stack = list(reversed(root.children))
-        while stack:
-            n = stack.pop()
-            if n.kind == ELEMENT:
-                elems.append(n)
-            if n.children:
-                stack.extend(reversed(n.children))
+    elems = _elements(root)
     _doc_cache = (root, _REV, elems)
     return elems
-
-
-def _collect_fast(children, append, fast_tags):
-    for n in children:
-        if n.kind == ELEMENT and n.name in fast_tags:
-            append(n)
-        if n.children:
-            _collect_fast(n.children, append, fast_tags)
-
-
-def _collect_match(children, append, alts):
-    for n in children:
-        if n.kind == ELEMENT and _matches_compiled(n, alts):
-            append(n)
-        if n.children:
-            _collect_match(n.children, append, alts)
 
 
 def select(root, selector):
     """All descendant elements of ``root`` matching ``selector``, in document
     order (dom_query Document/Selection::select).  Document-level selects
-    filter the cached flat element list; subtree selects use the recursive
-    preorder walk (same 2x-over-explicit-stack win as _document_elements)
-    with an iterative fallback for pathologically deep DOMs."""
+    filter the cached flat element list; subtree selects filter a fresh
+    walk of the subtree."""
     alts, fast_tags = compile_selector(selector)
-    if root.kind == DOCUMENT:
-        elems = _document_elements(root)
-        if fast_tags is not None:
-            return [n for n in elems if n.name in fast_tags]
-        return [n for n in elems if _matches_compiled(n, alts)]
-    out = []
-    try:
-        if fast_tags is not None:
-            _collect_fast(root.children, out.append, fast_tags)
-        else:
-            _collect_match(root.children, out.append, alts)
-        return out
-    except RecursionError:
-        pass
-    out.clear()
-    stack = list(reversed(root.children))
+    elems = _document_elements(root) if root.kind == DOCUMENT else _elements(root)
     if fast_tags is not None:
-        while stack:
-            n = stack.pop()
-            if n.kind == ELEMENT and n.name in fast_tags:
-                out.append(n)
-            if n.children:
-                stack.extend(reversed(n.children))
-        return out
-    while stack:
-        n = stack.pop()
-        if n.kind == ELEMENT and _matches_compiled(n, alts):
-            out.append(n)
-        if n.children:
-            stack.extend(reversed(n.children))
-    return out
+        return [n for n in elems if n.name in fast_tags]
+    return [n for n in elems if _matches_compiled(n, alts)]
 
 
 def select_first_attr(root, selector, name):
@@ -1026,4 +941,4 @@ def element_count(root):
     /root/reference/src/document.rs:18-26)."""
     if root.kind == DOCUMENT:
         return len(_document_elements(root))
-    return sum(1 for n in root.descendants() if n.kind == ELEMENT)
+    return len(_elements(root))

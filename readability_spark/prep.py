@@ -107,29 +107,20 @@ def clean_styles(root):
         if node.name in DEPRECATED_SIZE_ATTRIBUTE_ELEMS:
             node.remove_attrs(("width", "height"))
 
-    def rec(children):
-        for n in children:
-            if n.kind != dom.ELEMENT or n.name == "svg":
-                continue
-            strip(n)
-            if n.children:
-                rec(n.children)
-
     if root.kind == dom.ELEMENT:
         if root.name == "svg":
             return
         strip(root)
-    try:
-        rec(root.children)
-    except RecursionError:  # pathologically deep DOM: iterative fallback
-        stack = list(root.children)
-        while stack:
-            n = stack.pop()
-            if n.kind != dom.ELEMENT or n.name == "svg":
-                continue
-            strip(n)
-            if n.children:
-                stack.extend(n.children)
+    stack = [iter(root.children)]
+    while stack:
+        for n in stack[-1]:
+            if n.kind == dom.ELEMENT and n.name != "svg":
+                strip(n)
+                if n.children:
+                    stack.append(iter(n.children))
+                    break
+        else:
+            stack.pop()
 
 
 # -------------------------------------------------------------- lazy images

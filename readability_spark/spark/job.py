@@ -23,6 +23,7 @@ an idempotent append keyed by (run_id, partition_id).
 from __future__ import annotations
 
 import os
+import re
 import time
 from dataclasses import dataclass
 from itertools import repeat
@@ -45,7 +46,7 @@ from pyspark.sql.types import (
 
 from ..options import DEFAULT_OPTIONS
 from ..pipeline import extract_row
-from .sources import append_ref, read_ref
+from .sources import append_ref, is_table_ref, read_ref
 
 ARTICLE_FIELDS = [
     StructField("byline", StringType(), True),
@@ -288,25 +289,30 @@ class LineageCorruptError(RuntimeError):
     output rows), which is worse than failing loudly."""
 
 
+def _local_path(ref):
+    """The filesystem path of a local lineage ref, else None (a table ref or
+    a remote URI).  A ref is local only when it carries NO URI scheme at all
+    or the file: scheme: Hadoop normalizes to single-slash forms like dbfs:/x
+    or file:/x, so matching on '://' would misroute those to the local
+    filesystem and silently treat existing remote lineage as a fresh run."""
+    if is_table_ref(ref):
+        return None
+    scheme = re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", ref)
+    if scheme is None:
+        return ref
+    if scheme.group(0).lower() != "file:":
+        return None
+    path = ref[scheme.end():]
+    return path[2:] if path.startswith("//") else path
+
+
 def _read_lineage(spark, lineage_path):
     """Read the lineage table, distinguishing "no lineage yet" (fresh run →
     None) from "lineage exists but is unreadable" (corrupt →
     LineageCorruptError).  Silently treating corrupt lineage as fresh would
     re-append already-committed partitions."""
-    import re as _re
-
-    from .sources import is_table_ref
-
-    # a path is local only when it carries NO URI scheme at all (or the
-    # file: scheme): Hadoop normalizes to single-slash forms like
-    # dbfs:/x or file:/x, so matching on '://' would misroute those to
-    # os.listdir and silently treat existing remote lineage as a fresh run
-    scheme = _re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):", lineage_path)
-    local = not is_table_ref(lineage_path) and (
-        scheme is None or scheme.group(1).lower() == "file"
-    )
-    if local:
-        fs_path = _re.sub(r"^file:(//)?", "", lineage_path)
+    fs_path = _local_path(lineage_path)
+    if fs_path is not None:
         try:
             entries = os.listdir(fs_path)
         except FileNotFoundError:
@@ -347,11 +353,11 @@ def _append_lineage(spark, lineage_rows, lineage_path):
     (one row per logical partition per commit group); a path sink writes
     them directly with pyarrow — spinning up a Spark job to persist 64 tiny
     rows costs ~1.5 s of fixed overhead per commit group, which at small
-    commit units is pure scaling-efficiency loss.  Table refs (Iceberg)
-    still go through the engine so the append is transactional."""
-    from .sources import is_table_ref
-
-    if is_table_ref(lineage_path):
+    commit units is pure scaling-efficiency loss.  Table refs (Iceberg) and
+    remote paths (hdfs://, s3a://) go through the engine: the former so the
+    append is transactional, the latter because only it can write there."""
+    fs_path = _local_path(lineage_path)
+    if fs_path is None:
         append_ref(spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA), lineage_path)
         return
     import uuid
@@ -376,15 +382,15 @@ def _append_lineage(spark, lineage_rows, lineage_path):
         [pa.array(col, type=field.type) for col, field in zip(cols, schema)],
         schema=schema,
     )
-    os.makedirs(lineage_path, exist_ok=True)
+    os.makedirs(fs_path, exist_ok=True)
     # crash-safe commit: write to a dot-prefixed temp name (Spark/Hadoop
     # readers skip '.'/'_' files) then atomically rename into place, so a
     # crash mid-write (OOM/preemption — exactly the resume scenario lineage
     # exists for) can never leave a truncated parquet the resume path reads
     name = f"lineage-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(lineage_path, f".{name}.tmp")
+    tmp = os.path.join(fs_path, f".{name}.tmp")
     pq.write_table(table, tmp)
-    os.rename(tmp, os.path.join(lineage_path, name))
+    os.rename(tmp, os.path.join(fs_path, name))
 
 
 def completed_partitions(spark, lineage_path, run_id):

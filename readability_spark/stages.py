@@ -429,13 +429,12 @@ EMPTY_CONTAINER_TAGS = ("DIV", "SECTION", "HEADER", "H1", "H2", "H3", "H4", "H5"
 
 
 def _is_without_content(node):
-    if node.text().strip():
-        return False
     for child in node.children:
         if child.kind == dom.ELEMENT and child.name.upper() not in ("BR", "HR"):
             return False
-        # text children: already covered by the text() check above
-    return True
+    # checked after the children so that text() reads only this level (and
+    # empty br/hr): one text() per container over a deep nest is quadratic
+    return not node.text().strip()
 
 
 def remove_empty_containers(ctx):

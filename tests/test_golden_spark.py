@@ -150,6 +150,21 @@ def test_resume_without_recompute(spark, pages_df, tmp_path):
     assert clean == resumed
 
 
+def test_file_uri_lineage_completes_and_resumes(spark, pages_df, tmp_path, monkeypatch):
+    """A file:// lineage ref is a local path for the write as well as the
+    read: the job completes, leaves no stray relative 'file:' directory,
+    and a re-run finds every partition committed."""
+    monkeypatch.chdir(tmp_path)
+    out, lin = str(tmp_path / "a"), f"file://{tmp_path}/l"
+    rep = run_job(spark, pages_df, out, lin, run_id="f", num_partitions=4, salt_n=2, commit_groups=2)
+    assert rep.partitions_processed == 4
+    rep2 = run_job(spark, pages_df, out, lin, run_id="f", num_partitions=4, salt_n=2, commit_groups=2)
+    assert rep2.partitions_processed == 0
+    assert spark.read.parquet(out).count() == N_ROWS
+    assert spark.read.parquet(str(tmp_path / "l")).count() == 4
+    assert not (tmp_path / "file:").exists()
+
+
 def test_corrupt_lineage_fails_loudly(spark, pages_df, tmp_path):
     """A truncated lineage parquet (crash mid-write before the atomic rename
     existed) must NOT be silently treated as a fresh run — that would

@@ -64,8 +64,9 @@ def test_extract_deterministic(html):
 
 
 def test_pathologically_deep_nesting_extracts():
-    """Common-Crawl junk can nest deeper than Python's recursion limit —
-    parse, stages, text() and the serializer must all be iterative."""
+    """Common-Crawl junk can nest deeper than Python's recursion limit.
+    Parse, stages, text() and the serializer walk the tree iteratively by
+    construction (no recursion, no fallback), so depth has no limit."""
     html = "<body>" + "<div>" * 3000 + "deep text" + "</div>" * 3000 + "</body>"
     article, status, error = extract_row(html)
     assert status == "ok", error
